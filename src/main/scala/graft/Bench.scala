@@ -167,6 +167,32 @@ object Bench {
       .find(_.length <= 1900).get
   }
 
+  /** "class: first line of the message", capped at 300 chars — enough to
+    * name a failure's cause without letting an analyzer plan dump flood
+    * the detail line. */
+  private[graft] def describe(e: Throwable): String = {
+    val msg = Option(e.getMessage).map(_.linesIterator.nextOption().getOrElse(""))
+    (e.getClass.getName + msg.map(": " + _).getOrElse("")).take(300)
+  }
+
+  private def jsonStr(s: String): String =
+    "\"" + new String(com.fasterxml.jackson.core.io.JsonStringEncoder
+      .getInstance.quoteAsString(s)) + "\""
+
+  /** Diagnostic line printed before the canonical one (it may fall out of
+    * a truncated output tail): every per-query map with FULL names — cold,
+    * warm (min of the 3 warm runs), shuffle, isolated — and each failed
+    * query's exception, `{"query": "class: message"}`.
+    */
+  private[graft] def detailLine(results: Seq[Result],
+      shuffleMb: Seq[(String, Double)], qIsolated: Seq[(String, Double)],
+      qIsolatedShuffleMb: Seq[(String, Double)],
+      errors: Seq[(String, String)]): String = {
+    val errs = errors.map { case (n, e) => jsonStr(n) + ":" + jsonStr(e) }
+      .mkString("{", ",", "}")
+    s"""{"bench_detail":{"cold_total":${fmt(results.map(_._2).sum)},"queries_cold":${toJson(results.map(r => r._1 -> r._2))},"queries_warm":${toJson(results.map(r => r._1 -> r._3))},"queries_shuffle_mb":${toJson(shuffleMb, fmt2)},"queries_isolated":${toJson(qIsolated)},"queries_isolated_shuffle_mb":${toJson(qIsolatedShuffleMb, fmt2)},"errors":$errs}}"""
+  }
+
   /** Extract isolated-re-measure numbers from a prior round's BENCH
     * artifact text. Two fragment kinds exist: bench_detail's
     * `queries_isolated` (FULL query names) and the canonical line's
@@ -287,12 +313,12 @@ object Bench {
     // real, but not steady-state throughput. value/queries are the best of
     // the three warm runs (min damps scheduler/GC jitter); cold numbers
     // ride along on a diagnostic line.
-    // (seconds, succeeded) — a query that throws must NOT masquerade as a
-    // fast run; it is reported in the errors list
-    def timed(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
+    // (seconds, error) — a query that throws must NOT masquerade as a
+    // fast run; it is reported in the errors list with its cause
+    def timed(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Option[String]) = {
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-      ((System.nanoTime() - t0) / 1e9, ok)
+      val err = try { fn(spark, sfDir).count(); None } catch { case e: Throwable => Some(describe(e)) }
+      ((System.nanoTime() - t0) / 1e9, err)
     }
     // Local-iteration filter: SPARK_GRAFT_ONLY=q1,q2 benches a subset
     // (the driver never sets it, so driver runs stay full-suite). A typo'd
@@ -308,10 +334,12 @@ object Bench {
     val tally = new ShuffleTally
     spark.sparkContext.addSparkListener(tally)
     val shuffleMb = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val results: Seq[Result] = picked.map { case (name, fn) =>
       val before = tally.snapshot
-      val (cold, okCold) = timed(fn)
+      val (cold, coldErr) = timed(fn)
       val warm = Seq.fill(3)(timed(fn))
+      (coldErr +: warm.map(_._2)).flatten.headOption.foreach(errors(name) = _)
       // Isolation breather between queries, OUTSIDE the timed window:
       // localCheckpoint blocks from finished runs are only reclaimed by
       // the ContextCleaner once the owning DataFrames are GC'd, so a
@@ -325,7 +353,7 @@ object Bench {
       // above doubles as listener-queue drain time
       val after = tally.snapshot
       shuffleMb(name) = (after._1 - before._1) / 4.0 / 1e6
-      (name, cold, warm.map(_._1).min, okCold && warm.forall(_._2))
+      (name, cold, warm.map(_._1).min, !errors.contains(name))
     }
     // End-of-run ISOLATED re-measure of the slowest queries: one at a
     // time, fresh GC before each, nothing else in flight — the number a
@@ -383,16 +411,14 @@ object Bench {
       // exactly like the suite loop's per-query accounting
       System.gc()
       val after = tally.snapshot
-      if (runs.forall(_._2)) {
+      if (runs.forall(_._2.isEmpty)) {
         qIsolated(name) = runs.map(_._1).min
         qIsolatedShuffleMb(name) = (after._1 - before._1) / 2.0 / 1e6
       }
     }
-    // diagnostic line (may scroll off the tail): cold per-query map with
-    // FULL names, plus the error list
-    val errs = results.filterNot(_._4).map("\"" + _._1 + "\"").mkString("[", ",", "]")
     val totalShuffleMb = shuffleMb.values.sum
-    println(s"""{"bench_detail":{"cold_total":${fmt(results.map(_._2).sum)},"queries_cold":${toJson(results.map(r => r._1 -> r._2))},"queries_shuffle_mb":${toJson(shuffleMb.toSeq, fmt2)},"queries_isolated":${toJson(qIsolated.toSeq)},"queries_isolated_shuffle_mb":${toJson(qIsolatedShuffleMb.toSeq, fmt2)},"errors":$errs}}""")
+    println(detailLine(results, shuffleMb.toSeq, qIsolated.toSeq,
+      qIsolatedShuffleMb.toSeq, errors.toSeq))
     println(canonicalLine(results, sfDir,
       only.map(_ => SparkEntry.queries.size), Some(totalShuffleMb),
       shuffleMb.toMap, qIsolated.toMap, prevIsolated(),

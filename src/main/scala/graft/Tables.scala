@@ -12,6 +12,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * predicates into the parquet reader, so downstream `select`/`where`
   * become column pruning + row-group skipping at the source. At 100 TB the
   * same code reads only the touched columns/row groups.
+  *
+  * Every loader reads through `Sources.readParquetTable`, which infers a
+  * table's schema once (one Spark job) and serves later loads from it
+  * with no job. The remembered schema is keyed by the qualified path, the
+  * (name, length, modification time) of the files under it, and the
+  * session's parquet inference settings; a load infers again when the
+  * table was rewritten or one of those settings changed.
+  * Each load is still a fresh relation with new expression ids.
   */
 object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =

@@ -1,7 +1,9 @@
 package graft.sources
 
 import java.util.Properties
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Sources and sinks mirroring the reference's IO surface.
   *
@@ -127,9 +129,74 @@ object Sources {
 
   /** Harness-side table scan (the driver testdata): self-describing
     * parquet, one file per table.
+    *
+    * Schema inference runs once per file. `spark.read.parquet` starts a
+    * Spark job to read footers even for a single file, so the first read
+    * of a path infers through Spark's own path and remembers the schema;
+    * later reads pass it back with `spark.read.schema(..)`, which starts
+    * no job. The remembered schema is keyed by
+    *  - the qualified path,
+    *  - the (name, length, modification time) of every file under it,
+    *    from one listing with the session's Hadoop conf,
+    *  - the session settings parquet inference reads: `binaryAsString`,
+    *    `int96AsTimestamp`, `inferTimestampNTZ.enabled` and `mergeSchema`
+    *    under `spark.sql.parquet.`, plus
+    *    `spark.sql.legacy.parquet.nanosAsLong` and `spark.sql.caseSensitive`.
+    * A rewritten file (new length, mtime or part-file names) or a changed
+    * setting therefore infers again, and the new schema replaces the old
+    * entry: one entry per path. Every call returns a fresh relation with
+    * new expression ids, exactly as before. A path that cannot be listed
+    * is read uncached, so Spark raises its own error.
     */
-  def readParquetTable(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.parquet(s"$dir/$table.parquet")
+  def readParquetTable(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val path = s"$dir/$table.parquet"
+    parquetSchemaKey(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some((qualified, key)) =>
+        inferredSchemas.get(qualified) match {
+          case (`key`, schema) => spark.read.schema(schema).parquet(path)
+          case _ =>
+            val df = spark.read.parquet(path)
+            inferredSchemas.put(qualified, (key, df.schema))
+            df
+        }
+    }
+  }
+
+  /** Session settings that change what parquet schema inference returns. */
+  private val InferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  /** qualified path -> (key it was inferred under, schema). */
+  private val inferredSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (SchemaKey, StructType)]()
+
+  /** ((name, length, mtime) of every file, inference setting values). */
+  private type SchemaKey = (Seq[(String, Long, Long)], Seq[Option[String]])
+
+  /** (qualified path, cache key) of a parquet path, None if unlistable.
+    * The listing is taken before inference: a file rewritten in between
+    * is remembered under the old listing, which the next read's listing
+    * no longer matches, so it infers again rather than serve a stale
+    * schema. */
+  private def parquetSchemaKey(spark: SparkSession,
+      path: String): Option[(String, SchemaKey)] =
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      def leaves(s: FileStatus): Seq[FileStatus] =
+        if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(leaves) else Seq(s)
+      val files = leaves(fs.getFileStatus(p))
+        .map(s => (s.getPath.toString, s.getLen, s.getModificationTime))
+        .sortBy(_._1)
+      val confs = InferenceConfs.map(k => spark.conf.getOption(k))
+      Some((fs.makeQualified(p).toString, (files, confs)))
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Read a parquet corpus whose schema EVOLVED across vintages — the
     * 100 TB crawl reality: month N's writer adds a column (a new quality

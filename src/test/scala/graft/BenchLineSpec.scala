@@ -240,6 +240,19 @@ class BenchLineSpec extends AnyFunSuite {
       "an own-round-only artifact list must yield no prev, not itself")
   }
 
+  test("bench_detail carries full-name warm times and each failure's cause") {
+    val results = Seq(("ext_a", 2.5, 1.25, true), ("ext_b", 3.0, 2.0, false))
+    val err = Bench.describe(new IllegalStateException("bad \"quote\"\tand\nsecond line"))
+    assert(err == "java.lang.IllegalStateException: bad \"quote\"\tand")
+    val root = mapper.readTree(Bench.detailLine(results, Seq("ext_a" -> 0.5),
+      Seq.empty, Seq.empty, Seq("ext_b" -> err))).get("bench_detail")
+    assert(root.get("queries_warm").get("ext_a").asDouble() == 1.25)
+    assert(root.get("queries_warm").get("ext_b").asDouble() == 2.0)
+    assert(root.get("queries_cold").get("ext_b").asDouble() == 3.0)
+    assert(root.get("errors").size() == 1)
+    assert(root.get("errors").get("ext_b").asText() == err)
+  }
+
   test("pathological failure: every query errored still yields a short, parseable line") {
     val results = names80.map(n => (n, 2.0, 1.0, false))
     val line = Bench.canonicalLine(results, "/root/testdata/sf0.1")

@@ -32,6 +32,21 @@ class FixtureCanarySpec extends SparkSpec {
     assert(e.getMessage.contains("'ts'"))
   }
 
+  test("in-place drift at an already-checked path is still named") {
+    val dir = java.nio.file.Files.createTempDirectory("canary3").toString
+    for (t <- FixtureCanary.Expected.map(_._1).distinct)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf0001/$t.parquet"),
+        java.nio.file.Paths.get(s"$dir/$t.parquet"))
+    val clean = FixtureCanary.check(spark, dir)
+    assert(clean.isEmpty, clean.mkString("; "))
+    // same path, new content: a stale remembered schema would hide this
+    spark.read.parquet(s"$sf0001/events.parquet")
+      .withColumn("ts", lit(1.5d))
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val drifts = FixtureCanary.check(spark, dir)
+    assert(drifts.exists(m => m.contains("events.ts") && m.contains("DOUBLE")), drifts.mkString("; "))
+  }
+
   test("missing column is drift") {
     val dir = java.nio.file.Files.createTempDirectory("canary2").toString
     spark.read.parquet(s"$sf0001/events.parquet").drop("value")
